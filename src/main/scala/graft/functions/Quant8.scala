@@ -45,12 +45,19 @@ import org.apache.spark.sql.types._
   *    binary half-up: r = floor(|x|), +1 iff |x| − r >= 0.5 (that
   *    subtraction is exact for any finite double), sign restored.
   *  - `.cast("tinyint")` is the JVM double→byte conversion (d2l + l2b),
-  *    `x.toByte` here. |q| ≤ 127.5-ε by construction (|x| ≤ 127·(1+ulp)),
-  *    so the ANSI overflow check the composed cast carried can never
-  *    fire on finite input; NON-finite elements CRASHED the composed
-  *    form (ANSI CAST_OVERFLOW) — no persisted index ever contained
-  *    them — while this form quantizes them through the same d2l→l2b
-  *    conversion (Quant8Spec pins both behaviors).
+  *    `x.toByte` here. For a NORMAL absmax, |x| ≤ 127·(1+ulp) by
+  *    construction, so the rounded value always fits. For a SUBNORMAL
+  *    absmax it need not: absmax/127 rounds to the subnormal grid
+  *    (absmax = 190·MinPositiveValue gives scale = MinPositiveValue and
+  *    x = 190), where the composed cast raised ANSI CAST_OVERFLOW. This
+  *    form raises too — an ArithmeticException naming the element —
+  *    instead of wrapping the byte. NON-finite elements also CRASHED the
+  *    composed form — no persisted index ever contained them — while
+  *    this form quantizes them through the same d2l→l2b conversion
+  *    (Quant8Spec pins all three behaviors).
+  *  - A null element raises (IllegalArgumentException): the composed
+  *    form propagated a null q element, which the declared
+  *    `q ARRAY<TINYINT NOT NULL>` output cannot hold.
   */
 final case class Quant8(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -81,6 +88,8 @@ final case class Quant8(child: Expression)
     var absmax = 0.0
     var i = 0
     while (i < n) {
+      if (arr.isNullAt(i))
+        throw new IllegalArgumentException(s"graft_quant8: null element at index $i")
       val a = math.abs(arr.getDouble(i))
       if (nanSafeGt(a, absmax)) absmax = a
       i += 1
@@ -96,6 +105,10 @@ final case class Quant8(child: Expression)
           val ax = math.abs(x)
           val f = math.floor(ax)
           val r = if (ax - f >= 0.5) f + 1.0 else f
+          if (r > 127.0)
+            throw new ArithmeticException(s"graft_quant8: element $i quantizes " +
+              s"to ${if (x < 0.0) -r else r}, outside TINYINT (scale $scale " +
+              s"from the subnormal absmax $absmax)")
           if (x < 0.0) -r else r
         }
       q(i) = rounded.toByte

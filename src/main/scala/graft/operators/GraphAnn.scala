@@ -117,6 +117,9 @@ object GraphAnn {
   private[operators] final class Int8Vecs(q8: Array[Array[Byte]],
       scales: Array[Double]) extends VecStore {
     def n: Int = q8.length
+    /** Stored int8 payload of node i (shared, not copied). */
+    def q(i: Int): Array[Byte] = q8(i)
+    def scale(i: Int): Double = scales(i)
     def vec(i: Int): Array[Double] = {
       val b = q8(i); val sc = scales(i)
       Array.tabulate(b.length)(d => b(d) * sc)
@@ -404,8 +407,13 @@ object GraphAnn {
     // unreachable) generation wraparound. State is THREAD-LOCAL:
     // resident serve graphs are searched by concurrent tasks (the eval
     // counters' scaladoc already admits that concurrency), and results
-    // must never share mutable beam state across threads.
+    // must never share mutable beam state across threads. A graph used
+    // only to BUILD (or to link an append) drops its state when linking
+    // ends ([[releaseBeamState]]): the ThreadLocal entry would otherwise
+    // pin an n-int array per pooled executor thread until the map
+    // expunges it, long after the build graph itself is garbage.
     private final class BeamState {
+      beamStatesMade += 1
       val visitedGen = new Array[Int](n)
       var curGen = 0
       def nextGen(): Int = {
@@ -418,6 +426,12 @@ object GraphAnn {
     }
     private val beamState =
       ThreadLocal.withInitial[BeamState](() => new BeamState)
+    // BeamState allocations (racy counter, like evals) — GraphAnnProbe
+    // reads it to pin that linking releases its state
+    private[operators] var beamStatesMade = 0
+    /** Drop this thread's beam state for this graph; the next search on
+      * the thread allocates a fresh one. */
+    def releaseBeamState(): Unit = beamState.remove()
     /** Binary heap over (sim, id) pairs in parallel primitive arrays.
       * `max = true` pops best-first ([[better]]); `max = false` pops
       * worst-first (the exact reverse) — matching the PriorityQueue
@@ -716,6 +730,27 @@ object GraphAnn {
       }
     }
 
+    /** This graph re-based onto `store`, whose node j is this graph's
+      * node `order(j)` — the servable copy a build or append publishes
+      * (e.g. an [[Int8Vecs]] store in ascending vec_id order). Levels,
+      * adjacency order and the restored entry are exactly what
+      * [[withLayeredState]] / [[withAdjacency]] give a graph reloaded
+      * from persisted rows in that order, so both walk identically. */
+    def servable(store: VecStore, order: Array[Int]): Nsw = {
+      require(store.n == n && order.length == n,
+        s"servable: store ${store.n} / order ${order.length} != nodes $n")
+      val inv = new Array[Int](n)
+      var j = 0
+      while (j < n) { inv(order(j)) = j; j += 1 }
+      val out = new Nsw(store, params)
+      if (params.layered)
+        out.withLayeredState(order.toIndexedSeq.map { i =>
+          (levels(i), adj(i).take(deg(i)).map(inv),
+            Array.tabulate(levels(i))(l => upperNbrsRead(i, l + 1).toArray.map(inv)))
+        })
+      else out.withAdjacency(order.toIndexedSeq.map(i => adj(i).take(deg(i)).map(inv)))
+    }
+
     /** Install a prebuilt LAYERED graph for the FIRST `state.length`
       * nodes (local indexes, same insertion order as `vecs`) — the
       * serve-from-disk and incremental-append start state for v3
@@ -807,6 +842,7 @@ object GraphAnn {
         var i = math.max(start, 1)
         while (i < n) { insertLayered(i); i += 1 }
         frontier = n
+        releaseBeamState()
         return this
       }
       var i = math.max(start, 1) // node 0 is the seed, never "inserted"
@@ -823,6 +859,7 @@ object GraphAnn {
         i += 1
       }
       frontier = n
+      releaseBeamState()
       this
     }
 
@@ -868,12 +905,15 @@ object GraphAnn {
         if (rows.isEmpty) Iterator.empty
         else {
           val nsw = new Nsw(rows.map(_._2), params).build()
-          bc.value.iterator.flatMap { case (qid, q) =>
+          // searched eagerly so the per-call graph's beam state is
+          // released before the task moves on (it is never reused)
+          val out = bc.value.flatMap { case (qid, q) =>
             nsw.search(q, math.max(params.efSearch, kPerShard))
               .take(kPerShard)
-              .iterator
               .map { case (i, s) => Row(qid, rows(i)._1, s) }
           }
+          nsw.releaseBeamState()
+          out.iterator
         }
       }(Encoders.row(outSchema))
   }
@@ -912,6 +952,7 @@ object GraphAnn {
             nsw.search(q, math.max(params.efSearch, kPerShard))
             searches += 1
           }
+          nsw.releaseBeamState()
           Iterator.single(Row(rows.length.toLong, searches, nsw.evals))
         }
       }(Encoders.row(statsSchema))

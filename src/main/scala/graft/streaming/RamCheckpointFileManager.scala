@@ -31,7 +31,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * `streaming_tp` probe and any real deployment) keeps the default
   * durable manager; nothing outside [[StreamingOps.streamSession]] sets
   * this class. Entries are dropped per checkpoint root by the harness's
-  * `finally` ([[RamCheckpointFileManager.drop]]).
+  * `finally` ([[StreamingOps.releaseGateCkpt]]).
   */
 final class RamCheckpointFileManager(root: Path, conf: Configuration)
     extends CheckpointFileManager {
@@ -46,12 +46,16 @@ final class RamCheckpointFileManager(root: Path, conf: Configuration)
       override def cancel(): Unit = { done = true }
       override def close(): Unit = {
         if (!done) {
-          super.close()
-          if (!overwriteIfPossible && files.containsKey(key))
-            throw new org.apache.hadoop.fs.FileAlreadyExistsException(key)
-          files.put(key, buf.toByteArray)
-          mkdirsKey(parentOf(key))
           done = true
+          super.close()
+          // the commit is ONE atomic map op, so of two concurrent writers
+          // of a path exactly one wins a non-overwriting create — the
+          // arbitration the offset/commit WAL relies on (rename semantics
+          // of the durable managers)
+          if (overwriteIfPossible) files.put(key, buf.toByteArray)
+          else if (files.putIfAbsent(key, buf.toByteArray) != null)
+            throw new org.apache.hadoop.fs.FileAlreadyExistsException(key)
+          mkdirsKey(parentOf(key))
         }
       }
     }

@@ -181,9 +181,20 @@ object StreamingOps {
 
   /** Fresh throwaway checkpoint root for one gate query (a unique path
     * string — with the RAM manager nothing is ever created on disk). */
-  private def gateCkptDir(): String =
+  private[graft] def gateCkptDir(): String =
     System.getProperty("java.io.tmpdir").stripSuffix("/") +
       s"/graft_gate_ckpt/${java.util.UUID.randomUUID().toString.take(12)}"
+
+  /** Release a stopped gate query's checkpoint root: its RAM entries and
+    * any on-disk directory. Under the durable opt-out the query writes a
+    * real directory there, which Spark never deletes for an explicit
+    * checkpointLocation (only its own temporary ones), so without this a
+    * sweep leaks one directory per gate query. */
+  private[graft] def releaseGateCkpt(spark: SparkSession, ckpt: String): Unit = {
+    RamCheckpointFileManager.drop(ckpt)
+    val dir = new org.apache.hadoop.fs.Path(ckpt)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+  }
 
   /** Two-stream variant of [[runTwoPhase]]: both memory sources advance in
     * two phases, each closed by a far-future sentinel (the join's own
@@ -221,7 +232,7 @@ object StreamingOps {
       query.processAllAvailable()
     } finally {
       query.stop()
-      RamCheckpointFileManager.drop(ckpt)
+      releaseGateCkpt(spark, ckpt)
     }
     spark.table(sinkName).filter(col("user_id") >= 0)
   }
@@ -270,7 +281,7 @@ object StreamingOps {
       query.processAllAvailable()
     } finally {
       query.stop()
-      RamCheckpointFileManager.drop(ckpt)
+      releaseGateCkpt(spark, ckpt)
     }
     spark.table(sinkName).filter(col("user_id") >= 0)
   }

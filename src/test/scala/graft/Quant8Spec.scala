@@ -77,6 +77,29 @@ class Quant8Spec extends AnyFunSuite {
     fused(bad).collect() // defined (NaN quantizes through d2l→l2b), no throw
   }
 
+  private def rootMessages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("subnormal absmax: an element past TINYINT raises like the composed cast," +
+    " instead of wrapping") {
+    // scale = 190·MinPositiveValue / 127 rounds to MinPositiveValue, so
+    // the first element quantizes to 190
+    val bad = Seq(0L -> Seq(190 * Double.MinPositiveValue, Double.MinPositiveValue))
+      .toDF("vec_id", "v")
+    intercept[Exception] { composed(bad).collect() }
+    val ex = intercept[Exception] { fused(bad).collect() }
+    assert(rootMessages(ex).contains("graft_quant8: element 0 quantizes to 190"),
+      rootMessages(ex))
+  }
+
+  test("a null element raises instead of quantizing as garbage") {
+    val withNull = Seq(0L -> Seq[java.lang.Double](1.0, null, -2.0))
+      .toDF("vec_id", "v")
+    val ex = intercept[Exception] { fused(withNull).collect() }
+    assert(rootMessages(ex).contains("graft_quant8: null element at index 1"),
+      rootMessages(ex))
+  }
+
   test("fused quant8 equals the composed rule on fixed-seed random vectors") {
     val rnd = new java.util.Random(42L)
     val rows = (0 until 200).map { i =>
